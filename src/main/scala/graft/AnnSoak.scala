@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.queries.SimilarityQueries
+import graft.SparkEntry.timed
 
 /** Scale soak for the embedding-side paths added in round 10: the PQ
   * encode→artifact→probe chain (x68's deployment form) and the cell-scoped
@@ -44,14 +44,7 @@ object AnnSoak {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 200000L
     val dim = 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // deterministic synthetic corpus: 64 floats per row in [-1, 1)
@@ -62,17 +55,13 @@ object AnnSoak {
             / lit(1000000.0)).cast("float")): _*).as("embedding"))
       .persist()
     val nRows = emb.count()
-
-    def time[A](f: => A): (Double, A) = {
-      val t0 = System.nanoTime(); val a = f; ((System.nanoTime() - t0) / 1e9, a)
-    }
     val calibration = scala.collection.mutable.ArrayBuffer.empty[Double]
     Bench.calibrate(spark) // untimed JIT warm-up
     calibration += Bench.calibrate(spark)
 
     // one-time encode + artifact write (the savePqIndex form)
     val idx = java.nio.file.Files.createTempDirectory("ann-soak").toString + "/codes"
-    val (tEncode, _) = time {
+    val (tEncode, _) = timed {
       graft.sources.Sinks.parquet(SimilarityQueries.pqCorpusCodes(emb), idx)
     }
     calibration += Bench.calibrate(spark)
@@ -83,14 +72,14 @@ object AnnSoak {
         array((0 until dim).map(j =>
           ((pmod(xxhash64(col("id") + 7919, lit(j)), lit(2000000L)) - lit(1000000L))
             / lit(1000000.0)).cast("float")): _*).as("q_emb"))
-    val (tProbe, probeRows) = time {
+    val (tProbe, probeRows) = timed {
       SimilarityQueries.pqShortlistFromIndex(spark, queries, idx).count()
     }
     calibration += Bench.calibrate(spark)
 
     // SemDeDup pair stage with bounded cells: k = n/cellTarget
     val k = math.max(16L, nRows / cellTarget)
-    val (tSem, semStats) = time {
+    val (tSem, semStats) = timed {
       val assigned = emb.withColumn("cell",
         pmod(xxhash64(col("vec_id"), lit(42)), lit(k)).cast("int"))
       val out = SimilarityQueries.semanticDedupOf(assigned, tau = 0.5)

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions.broadcast
+
+import graft.SparkEntry.timed
 
 /** Scale soak for the x99 BPE merge kernel, separating its two cost axes:
   *
@@ -75,14 +77,7 @@ object BpeSoak {
     val encodeOnly = args.headOption.contains("encode")
     val baseVocab = if (!encodeOnly && args.length > 0) args(0).toInt else 20000
     val baseOcc = if (!encodeOnly && args.length > 1) args(1).toLong else 1000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -97,13 +92,10 @@ object BpeSoak {
         .write.parquet(s"$dir/documents.parquet")
       dir
     }
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     def runPoint(tag: String, vocab: Int, occ: Long): Unit = {
       val dir = synth(vocab, occ)
       val calib0 = Bench.calibrate(spark)
-      val sec = time {
+      val (sec, _) = timed {
         graft.queries.TextQueries.bpeMerges.run(spark, dir)
           .write.format("noop").mode("overwrite").save()
       }
@@ -134,7 +126,7 @@ object BpeSoak {
         alphabet(encRnd.nextInt(alphabet.length))).mkString).mkString(" "))
     val docsDf = spark.createDataset(
       docs.toIndexedSeq.zipWithIndex.map { case (t, i) => Doc(i.toLong, t) }
-    )(Encoders.product[Doc]).toDF().repartition(cpus.toInt).cache()
+    )(Encoders.product[Doc]).toDF().repartition(SparkEntry.localCpus).cache()
     docsDf.count()
     // k = 30000 is a real production vocab size: heap + dispatch only (the
     // scan form would be ~60 ms/doc there — the point of the dispatch)
@@ -143,9 +135,7 @@ object BpeSoak {
         .flatMap(p => Seq(p._1, p._2)).mkString(" ")
       def kernelSec(heap: Boolean): Double = {
         docs.take(200).foreach(d => graft.functions.BpeEncode.tokensPath(d, fl, heap))
-        val t0 = System.nanoTime()
-        docs.foreach(d => graft.functions.BpeEncode.tokensPath(d, fl, heap))
-        (System.nanoTime() - t0) / 1e9
+        timed(docs.foreach(d => graft.functions.BpeEncode.tokensPath(d, fl, heap)))._1
       }
       val heapSec = kernelSec(heap = true)
       val scanUs =
@@ -154,7 +144,7 @@ object BpeSoak {
       // merges ride a broadcast 1-row frame, the x103 artifact posture
       val mergesDf = broadcast(spark.createDataset(Seq(fl))(Encoders.STRING)
         .toDF("merges"))
-      val sparkSec = time {
+      val (sparkSec, _) = timed {
         docsDf.crossJoin(mergesDf)
           .selectExpr("graft_bpe_tokens(text, merges) AS toks")
           .write.format("noop").mode("overwrite").save()
@@ -181,9 +171,7 @@ object BpeSoak {
           1L + 20000L / (id + 1))
       }.groupBy(_._1).map { case (w, g) => (w, g.map(_._2).sum) }.toSeq
       Seq(3, 300, 3000, 30000).foreach { k =>
-        val t0 = System.nanoTime()
-        val ms = graft.operators.BpeTrainer.train(wc, k)
-        val sec = (System.nanoTime() - t0) / 1e9
+        val (sec, ms) = timed(graft.operators.BpeTrainer.train(wc, k))
         println(s"""{"soak":"bpe","ladder":"train","k":$k,"vocab":${wc.size},""" +
           s""""merges_learned":${ms.length},"train_sec":${d3(sec)}}""")
       }

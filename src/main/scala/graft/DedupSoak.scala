@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 
 import graft.queries.TextQueries
+import graft.SparkEntry.timed
 
 /** Scale soak for the near-dup dedup path (x03) and the hierarchical
   * cluster stage (x26): generates a corpus with planted exact-dup
@@ -40,13 +41,7 @@ object DedupSoak {
     val chainLen = if (args.length > 2) args(2).toInt else 6
     val perBase = copies + chainLen
     val nTok = 60
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
+    val spark = SparkEntry.localBuilder()
       // the bucketed-band stage writes a managed table; keep it off the repo
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("dedup-soak-wh").toString)
@@ -69,10 +64,6 @@ object DedupSoak {
       Doc(i, toks.mkString(" "))
     }(Encoders.product[Doc]).toDF().persist()
     val nDocs = docs.count()
-
-    def time[A](f: => A): (Double, A) = {
-      val t0 = System.nanoTime(); val a = f; ((System.nanoTime() - t0) / 1e9, a)
-    }
     // host-capacity calibration (Bench.calibrate): sampled before the
     // stages, between clusters and probe, and at the end — a soak row is
     // only comparable across rounds when its calibration samples match
@@ -82,16 +73,16 @@ object DedupSoak {
     calibration += Bench.calibrate(spark)
     // one-time sketch + durable artifact write (the saveMinhashIndex form)
     val idx = java.nio.file.Files.createTempDirectory("dedup-soak").toString + "/sigs"
-    val (tBuild, _) = time {
+    val (tBuild, _) = timed {
       graft.sources.Sinks.sortedParquet(
         TextQueries.minhashSignaturesOf(docs), idx, Seq("doc_id"))
     }
     // x03 pipeline from the artifact: banded pair join + exact verify
-    val (tPairs, nPairs) = time {
+    val (tPairs, nPairs) = timed {
       TextQueries.dedupMinhashFromIndex(spark, idx).count()
     }
     // x26 stage: CC to fixpoint + MinHashUnion cluster signatures
-    val (tClusters, stats) = time {
+    val (tClusters, stats) = timed {
       val sigs = spark.read.parquet(idx)
       val pairs = TextQueries.minhashPairs(sigs).select("doc_a", "doc_b")
         .localCheckpoint(eager = false)
@@ -119,7 +110,7 @@ object DedupSoak {
       }
       Doc(1000000000L + i, toks.mkString(" "))
     }(Encoders.product[Doc]).toDF()
-    val (tProbe, nProbeHits) = time {
+    val (tProbe, nProbeHits) = timed {
       TextQueries.nearDupProbe(batch, corpusSigs, threshold = 0.5).count()
     }
     calibration += Bench.calibrate(spark)
@@ -129,10 +120,10 @@ object DedupSoak {
     // the one-time artifact write; probe_bucketed_sec is what every later
     // ingest batch pays — compare against probe_sec, which re-derives and
     // re-shuffles the corpus band rows per probe)
-    val (tBandBuild, _) = time {
+    val (tBandBuild, _) = timed {
       TextQueries.saveBandIndex(corpusSigs, "soak_bands")
     }
-    val (tProbeBucketed, nProbeBucketedHits) = time {
+    val (tProbeBucketed, nProbeBucketedHits) = timed {
       TextQueries.nearDupProbeWithBands(batch, spark.table("soak_bands"),
         corpusSigs, threshold = 0.5).count()
     }
@@ -151,7 +142,7 @@ object DedupSoak {
       df.select(col("doc_id"),
         array_join(array_sort(array_distinct(split(col("text"), " "))), " ").as("bk"))
     val corpusKeys = bowKey(docs).select("bk")
-    val (tBloomBuild, bloomRow) = time {
+    val (tBloomBuild, bloomRow) = timed {
       TextQueries.bloomBuild(corpusKeys, "bk", bloomM).localCheckpoint(eager = true)
     }
     val bloomBatch = spark.range(1000L).map { i =>
@@ -160,7 +151,7 @@ object DedupSoak {
         else (0 until nTok).map(t => s"bfresh${i}t$t") // non-member
       Doc(2000000000L + i, toks.mkString(" "))
     }(Encoders.product[Doc]).toDF()
-    val (tBloomProbe, nBloomHits) = time {
+    val (tBloomProbe, nBloomHits) = timed {
       TextQueries.bloomMembership(bowKey(bloomBatch), "bk", bloomRow, corpusKeys, bloomM)
         .filter(col("n_matches").isNotNull).count()
     }
@@ -169,7 +160,7 @@ object DedupSoak {
     // five fixed iterative join+aggregate rounds over |edges| rows; the
     // ladder row proves the iteration cost scales with the DUP GRAPH, not
     // the corpus (pairs come banded from the artifact, like the x26 CC)
-    val (tPagerank, prStats) = time {
+    val (tPagerank, prStats) = timed {
       val pr = TextQueries.pagerankFromWeightedPairs(
         TextQueries.weightedPairs(corpusSigs))
       val a = pr.agg(count(lit(1)), max("pr")).head()
@@ -181,12 +172,12 @@ object DedupSoak {
     // copy's windows duplicate; chain docs overlap partially), and the
     // window explode is ~nTok rows/doc — these rows prove the 8-byte-key
     // exchange plans stay linear where a hot-key or n² plan would blow up.
-    val (tSubDup, nSubDupDocs) = time {
+    val (tSubDup, nSubDupDocs) = timed {
       TextQueries.substringDupOf(docs).filter(col("dup_win") > 0).count()
     }
     // sum(length) forces the ordered reassembly of text_kept — the cut's
     // actual output — which a bare count() would let Catalyst prune
-    val (tSubCut, subCutTokens) = time {
+    val (tSubCut, subCutTokens) = timed {
       TextQueries.substringCutOf(docs)
         .agg(sum(length(col("text_kept"))), sum("n_cut")).head().getLong(1)
     }

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.SparkEntry.timed
 
 /** Scale soak for the triangle kernel ([[graft.operators.Triangles]], the
   * x96 engine): measures BOTH edge orientations on a synthesized graph
@@ -27,13 +28,7 @@ object GraphSoak {
   def main(args: Array[String]): Unit = {
     val nNodes = if (args.length > 0) args(0).toInt else 200000
     val hubDeg = if (args.length > 1) args(1).toInt else 3000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // background: 3·n pseudo-random edges (xxhash64-derived endpoints,
@@ -60,9 +55,6 @@ object GraphSoak {
       .localCheckpoint(eager = true)
     val nEdges = edges.count()
 
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     val calibration = scala.collection.mutable.ArrayBuffer.empty[Double]
     Bench.calibrate(spark) // untimed JIT warm-up
     calibration += Bench.calibrate(spark)
@@ -70,12 +62,12 @@ object GraphSoak {
     import graft.operators.Triangles
     // one untimed warm-up of the shared prefix (checkpointed edges scan)
     edges.write.format("noop").mode("overwrite").save()
-    val degSec = time {
+    val (degSec, _) = timed {
       Triangles.tallies(edges, orientByDegree = true)
         .write.format("noop").mode("overwrite").save()
     }
     calibration += Bench.calibrate(spark)
-    val idSec = time {
+    val (idSec, _) = timed {
       Triangles.tallies(edges, orientByDegree = false)
         .write.format("noop").mode("overwrite").save()
     }

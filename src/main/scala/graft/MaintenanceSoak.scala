@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{IntervalJoin, MergeInto}
+import graft.SparkEntry.timed
 
 /** Measured scale ladder for the two round-10 maintenance operators
   * (PLANS.md records the calm-window brackets):
@@ -29,20 +29,8 @@ object MaintenanceSoak {
   def main(args: Array[String]): Unit = {
     val ns = if (args.nonEmpty) args.map(_.toLong).toSeq
       else Seq(100000L, 400000L, 1600000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    def time[A](f: => A): (Double, A) = {
-      val t0 = System.nanoTime()
-      val a = f
-      ((System.nanoTime() - t0) / 1e9, a)
-    }
 
     // ---- interval overlap ladder --------------------------------------
     for (n <- ns) {
@@ -55,11 +43,11 @@ object MaintenanceSoak {
         .withColumn("hi", col("lo") + 1L + pmod(xxhash64(col("lo")), lit(1000)))
       val l = side("l", 1)
       val r = side("r", 2)
-      val (tB, pairs) = time {
+      val (tB, pairs) = timed {
         IntervalJoin.overlapJoin(l, r, "lo", "hi", bucketWidth = 1000L).count()
       }
       val (tN, pairsN) =
-        if (n <= 400000L) time {
+        if (n <= 400000L) timed {
           l.join(r.withColumnRenamed("lo", "lo2").withColumnRenamed("hi", "hi2"),
             col("lo") <= col("hi2") && col("lo2") <= col("hi")).count()
         } else (-1.0, pairs)
@@ -76,8 +64,8 @@ object MaintenanceSoak {
       .select((col("id") * 100L).as("id"), xxhash64(col("id"), lit(9)).as("payload"),
         when(col("id") % 3 === 0, "D").otherwise("U").as("op"),
         col("id").as("seq"))
-    val (tScan, nScan) = time(snap.count())
-    val (tMerge, nMerge) = time(MergeInto.applyChangeset(snap, changes, Seq("id")).count())
+    val (tScan, nScan) = timed(snap.count())
+    val (tMerge, nMerge) = timed(MergeInto.applyChangeset(snap, changes, Seq("id")).count())
     println(s"""{"metric":"merge_soak","snap_rows":$nScan,"merged_rows":$nMerge,""" +
       s""""scan_sec":$tScan,"merge_sec":$tMerge}""")
     spark.stop()

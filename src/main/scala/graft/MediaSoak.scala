@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.Media
+import graft.SparkEntry.timed
 
 /** Scale soak for the multimodal dedup chain (x84/x85): aHash extraction
   * over synthetic image payloads, then near-dup pairs via BOTH candidate
@@ -32,14 +32,7 @@ object MediaSoak {
 
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 100000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val base = spark.range(n)
@@ -74,19 +67,15 @@ object MediaSoak {
         "named_struct('media_type', 'image', 'format', 'png', " +
           "'width', 8, 'height', 8, 'duration_ms', CAST(NULL AS BIGINT))"))
       .select("media_id", "content", "meta")
-
-    def time[A](f: => A): (Double, A) = {
-      val t0 = System.nanoTime(); val a = f; ((System.nanoTime() - t0) / 1e9, a)
-    }
     val calibration = scala.collection.mutable.ArrayBuffer.empty[Double]
     Bench.calibrate(spark) // untimed JIT warm-up
     calibration += Bench.calibrate(spark)
 
     val hashes = Media.imageHashes(media).persist()
-    val (tHash, nHashes) = time { hashes.count() }
+    val (tHash, nHashes) = timed { hashes.count() }
     calibration += Bench.calibrate(spark)
 
-    val (tMih, mihStats) = time {
+    val (tMih, mihStats) = timed {
       val out = Media.phashNearDupPairsMih(hashes, tau = 8)
       // coalesce: sum() over ZERO pairs is null — a corpus/tau with no
       // near-dups must print a zero row, not NPE the soak
@@ -98,7 +87,7 @@ object MediaSoak {
 
     val (tBanded, bandedPairs) =
       if (n <= bandedCap)
-        time { Media.phashNearDupPairs(hashes, nBands = 8, tau = 8).count() }
+        timed { Media.phashNearDupPairs(hashes, nBands = 8, tau = 8).count() }
       else (-1.0, -1L) // documented quadratic regime — measured below the cap
     calibration += Bench.calibrate(spark)
 

@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 
 import graft.operators.PrefixQuota
+import graft.SparkEntry.timed
 
 /** Scale soak for the x53 mixture cut (PrefixQuota.takeUntilQuota):
   * generates a skewed source mixture (one source holds ~70% of the rows —
@@ -24,14 +25,7 @@ object MixtureSoak {
 
   def main(args: Array[String]): Unit = {
     val nRows = if (args.length > 0) args(0).toInt else 1000000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -43,10 +37,6 @@ object MixtureSoak {
       Row(src, i, 20L + Math.floorMod(i * 1103515245L, 100L))
     }(Encoders.product[Row]).toDF().persist()
     rows.count()
-
-    def time[A](f: => A): (Double, A) = {
-      val t0 = System.nanoTime(); val a = f; ((System.nanoTime() - t0) / 1e9, a)
-    }
     val calibration = scala.collection.mutable.ArrayBuffer.empty[Double]
     Bench.calibrate(spark) // untimed JIT warm-up
     calibration += Bench.calibrate(spark)
@@ -57,7 +47,7 @@ object MixtureSoak {
     val ord = md5(col("doc_id").cast("string"))
     val est = rows.queryExecution.optimizedPlan.stats.sizeInBytes
     val bucketLen = PrefixQuota.dispatchBucketLen(est)
-    val (tCut, nKept) = time {
+    val (tCut, nKept) = timed {
       PrefixQuota.takeUntilQuota(rows, "source", ord, col("doc_id"),
         col("n_tok"), quota).count()
     }
@@ -67,7 +57,7 @@ object MixtureSoak {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("source").orderBy(ord, col("doc_id"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val (tNaive, nNaive) = time {
+    val (tNaive, nNaive) = timed {
       rows.withColumn("cum_before", coalesce(sum(col("n_tok")).over(w), lit(0L)))
         .filter(col("cum_before") < quota).count()
     }

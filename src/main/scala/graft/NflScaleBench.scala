@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.nfl.{NflPipeline, NflSynth}
 
 /** Scale bench for the reference-parity pipeline itself (the join/window
@@ -15,17 +13,11 @@ object NflScaleBench {
   def main(args: Array[String]): Unit = {
     val nGames = if (args.length > 0) args(0).toInt else 50
     val playsPerGame = if (args.length > 1) args(1).toInt else 60
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
     // the cluster posture lives in ONE place — NflPipeline.scaleConf —
     // shared by this bench and any real deployment (r18 verdict item 5);
     // each setting's rationale is documented there
-    val builder = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
-    val spark = NflPipeline.scaleConf(cpus.toInt)
-      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+    val spark = NflPipeline.scaleConf(SparkEntry.localCpus)
+      .foldLeft(SparkEntry.localBuilder()) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -35,14 +27,10 @@ object NflScaleBench {
       NflSynth.plays(spark, nGames, playsPerGame),
       NflSynth.players(spark))
 
-    val t0 = System.nanoTime()
     val trackingRows = nGames.toLong * playsPerGame * 10 * 20
-    val nFinal = pipeline.rushersFinal.count()
-    val tMetric = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val nBlockers = pipeline.blockersWithMetric.count()
-    val nThrow = pipeline.timeToThrow.count()
-    val tRest = (System.nanoTime() - t1) / 1e9
+    val (tMetric, nFinal) = SparkEntry.timed(pipeline.rushersFinal.count())
+    val (tRest, (nBlockers, nThrow)) = SparkEntry.timed(
+      (pipeline.blockersWithMetric.count(), pipeline.timeToThrow.count()))
     println(s"""{"metric":"nfl_pipeline","tracking_rows":$trackingRows,""" +
       s""""rushers_final":$nFinal,"blockers":$nBlockers,"time_to_throw":$nThrow,""" +
       s""""metric_sec":$tMetric,"downstream_sec":$tRest}""")

@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Quantiles
+import graft.SparkEntry.timed
 
 /** Crossover soak for the two exact-quantile plans: times the
   * range-partitioned cluster-parallel plan against the builtin `percentile`
@@ -19,13 +19,7 @@ object QuantilesSoak {
     val groupCounts =
       if (args.length > 1) args.drop(1).map(_.toLong).toSeq
       else Seq(3L, 1000L, 100000L, 1000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     for (g <- groupCounts) {
@@ -33,15 +27,10 @@ object QuantilesSoak {
       val df = spark.range(rows)
         .select((col("id") % g).as("g"),
           pmod(hash(col("id")), lit(1000000)).cast("double").as("v"))
-      def time(f: => Long): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val n = f
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      val (tPar, nPar) = time {
+      val (tPar, nPar) = timed {
         Quantiles.parallelQuantiles(df, "g", "v", Seq(0.25, 0.5)).count()
       }
-      val (tBi, nBi) = time {
+      val (tBi, nBi) = timed {
         Quantiles.builtinQuantiles(df, "g", "v", Seq(0.25, 0.5)).count()
       }
       require(nPar == nBi && nPar == g, s"row mismatch: parallel=$nPar builtin=$nBi want=$g")

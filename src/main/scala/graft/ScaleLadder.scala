@@ -153,9 +153,7 @@ object ScaleLadder {
   private def time2(q: queries.QueryDef, spark: SparkSession, dir: String): (Double, Long) =
     try {
       val ts = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        q.run(spark, dir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+        SparkEntry.timed(q.run(spark, dir).write.format("noop").mode("overwrite").save())._1
       }
       (ts.min, q.run(spark, dir).count())
     } catch { case e: Throwable =>
@@ -169,12 +167,8 @@ object ScaleLadder {
     // big rungs (100×) measure a subset without paying the full sweep
     val wanted = if (args.length > 2) args(2).split(",").toSeq else hotQueries
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val cpus = SparkEntry.localCpus
+    val spark = SparkEntry.localBuilder()
       // The ladder's whole point is N× data on a FIXED harness, and a real
       // cluster never runs an N×-sized shuffle into a 1×-sized partition
       // count: let AQE size reduce stages by bytes instead of pinning them
@@ -184,18 +178,16 @@ object ScaleLadder {
       // stays bounded (round-14: x124's pack-body aggregate at 1000× needed
       // ~450 MB/task at 16 partitions and OOM'd; at AQE-chosen counts it
       // fits the same 8g heap).
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", 16 * cpus.toInt)
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", 16L * cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // an already-synthesized outDir is reused (delete it to force a rebuild)
     // so iterating on the query list doesn't pay the ~11 s synth each run
-    val tSynth = System.nanoTime()
-    val reused = new java.io.File(s"$out/events.parquet").exists()
-    if (!reused) synthesize(spark, base, out, factor)
-    val synthSec = (System.nanoTime() - tSynth) / 1e9
+    val (synthSec, _) = SparkEntry.timed {
+      if (!new java.io.File(s"$out/events.parquet").exists()) synthesize(spark, base, out, factor)
+    }
     Bench.calibrate(spark) // untimed JIT warm-up
     println(s"""{"ladder":"synth","factor":$factor,"base":"$base","sec":${d3(synthSec)},""" +
       s""""calibration_sec":${d3(Bench.calibrate(spark))}}""")

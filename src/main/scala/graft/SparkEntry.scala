@@ -24,4 +24,27 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     defs.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** Cores for a local session: `SPARK_GRAFT_CPUS`, else min(32, nproc). */
+  def localCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
+
+  /** The local-session recipe every main shares: `local[cpus]` with the
+    * graft extensions, one shuffle partition per core and the UI off.
+    * Callers add their own confs, then `getOrCreate()`. */
+  def localBuilder(): SparkSession.Builder = {
+    val cpus = localCpus
+    SparkSession.builder()
+      .withExtensions(new GraftExtensions)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
+      .config("spark.ui.enabled", "false")
+  }
+
+  /** Wall seconds of `f`, with its result. */
+  def timed[A](f: => A): (Double, A) = {
+    val t0 = System.nanoTime()
+    val a = f
+    ((System.nanoTime() - t0) / 1e9, a)
+  }
 }

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.SparkEntry.timed
 
 /** Scale soak for x80's inverted-index sparse cosine: the claim under test
   * is the df-cap — candidate volume is Σ_kept df², so pruning hot postings
@@ -21,14 +22,7 @@ import org.apache.spark.sql.functions._
 object SparseSoak {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 100000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val vocab = 3L * n
@@ -39,10 +33,6 @@ object SparseSoak {
           .as("text"))
       .persist()
     docsDf.count()
-
-    def time[A](f: => A): (Double, A) = {
-      val t0 = System.nanoTime(); val a = f; ((System.nanoTime() - t0) / 1e9, a)
-    }
     val calibration = scala.collection.mutable.ArrayBuffer.empty[Double]
     Bench.calibrate(spark) // untimed JIT warm-up
     calibration += Bench.calibrate(spark)
@@ -62,7 +52,7 @@ object SparseSoak {
       .head()
     calibration += Bench.calibrate(spark)
 
-    val (tPairs, nPairs) = time {
+    val (tPairs, nPairs) = timed {
       graft.queries.TextQueries.sparseCosinePairsOf(docsDf).count()
     }
     calibration += Bench.calibrate(spark)

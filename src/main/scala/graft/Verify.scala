@@ -1,24 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: sfDir outDir [namePrefix] — the optional prefix restricts the
-    // dump to matching queries (local iteration; the driver passes two args)
+    // dump to matching queries (local iteration; the driver passes two args).
+    // Checked before any session starts.
     val (sfDir, outDir, nameFilter) = args match {
       case Array(s, o)    => (s, o, "")
       case Array(s, o, f) => (s, o, f)
+      case _ => throw new IllegalArgumentException(
+        s"usage: Verify sfDir outDir [namePrefix] (got ${args.length} arguments)")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = SparkEntry.localBuilder()
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -81,6 +81,10 @@ object Quantiles {
       ps: Seq[Double], rowsPerGroupHint: Option[Long] = None): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
       s"percentiles must be in [0, 1], got $ps")
+    // the entry projection below would otherwise build an ambiguous frame
+    // that fails far from this call
+    require(groupCol != valueCol,
+      s"groupCol and valueCol must differ, got groupCol='$groupCol', valueCol='$valueCol'")
     // r21 (guide §2.3 "project before"): quantiles read exactly two
     // columns — project them FIRST so (a) the dispatch estimate below
     // prices the two columns instead of the caller's whole frame (a
@@ -169,6 +173,8 @@ object Quantiles {
       ps: Seq[Double]): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
       s"percentiles must be in [0, 1], got $ps")
+    require(groupCol != valueCol,
+      s"groupCol and valueCol must differ, got groupCol='$groupCol', valueCol='$valueCol'")
     val df = df0.select(col(groupCol), col(valueCol)) // see groupQuantiles
     val est = estimatedBytesForDispatch(df)
     if (est <= BigInt(builtinMaxBytesSingleGroup))

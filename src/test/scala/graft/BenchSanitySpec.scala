@@ -15,12 +15,11 @@ import scala.jdk.CollectionConverters._
   *     which rounds 7-9 proved is a hard 2000 chars including sbt's
   *     trailing "[success]" line — three rounds of BENCH_r*.json carried
   *     `parsed: null` because the line was truncated from the front;
-  *   - `queries` keys are the SHORT registry ids (`q01`, `x31` — unique,
-  *     asserted here), each valued min-of-3 at %.3f;
-  *   - `hot_max` carries max ONLY for host-contended rows (max ≥ 2×min;
-  *     read rule: trust min) — calm rows pay no spread bytes;
-  *   - the scalar summary fields — failed, calibration_sec, value, sf —
-  *     sit at the END of the line so front-truncation costs least;
+  *   - `queries_packed` holds "k:v" pairs keyed by the SHORT registry ids
+  *     (`q01`, `x31` — unique, asserted here), each the min at %.1f;
+  *   - the keys keep the order of the r21 artifact, with the scalar
+  *     summary fields — failed, calibration_sec, value, sf — at the END of
+  *     the line so front-truncation costs least;
   *   - a failed query reports -1, never a partial time.
   */
 class BenchSanitySpec extends AnyFunSuite with Matchers {
@@ -29,26 +28,42 @@ class BenchSanitySpec extends AnyFunSuite with Matchers {
 
   private def render(samples: Seq[(String, Seq[Double])]) =
     Bench.renderJson(samples, calibration = Seq(0.21, 0.32, 0.19),
-      ivfTrain = 1.5, probeOnly = 0.8, sfDir = "/root/testdata/sf0.1")
+      sfDir = "/root/testdata/sf0.1")
+
+  /** The packed per-query field as ordered (short key, min) pairs. */
+  private def packed(root: com.fasterxml.jackson.databind.JsonNode): Seq[(String, Double)] =
+    root.get("queries_packed").asText().split(' ').toSeq.map { kv =>
+      val c = kv.lastIndexOf(':')
+      kv.substring(0, c) -> kv.substring(c + 1).toDouble
+    }
+
+  /** The artifact line inside a committed driver wrapper's tail. */
+  private def committedLine(file: String): String = {
+    val tail = mapper.readTree(new java.io.File(file)).get("tail").asText()
+    tail.substring(tail.lastIndexOf("{\"metric\"")).linesIterator.next()
+  }
+
+  /** Live-registry samples; calm (max/min < 2), min = 0.1 + i ms. */
+  private def registrySamples: Seq[(String, Seq[Double])] =
+    SparkEntry.defs.map(_.name).zipWithIndex.map { case (n, i) =>
+      val base = 0.1 + i * 0.001
+      n -> Seq(base + 0.02, base, base + 0.01)
+    }
 
   test("displayed calibration trace always shows the band-setting samples (max AND min)") {
     // the emitted noise band is max/min over ALL samples; the displayed
-    // six are first + last + max + min + even fill, so the samples that
-    // SET the band can never be silently dropped (the r16 take(6) lesson:
+    // four are exactly first + last + max + min, so the samples that SET
+    // the band can never be silently dropped (the r16 take(6) lesson:
     // [0.25…0.37] displayed while noise read 3.49 from a dropped 7th
     // sample; plain even spacing would still miss a max on an unsampled
     // index — here the max sits at index 7, which even spacing skips)
     val calib = Seq(0.25, 0.37, 0.31, 0.34, 0.26, 0.26, 0.27, 0.87, 0.21, 0.26, 0.28)
     val line = Bench.renderJson(
       Seq("q01_filter_project" -> Seq(0.3, 0.2, 0.25)), calibration = calib,
-      ivfTrain = 1.5, probeOnly = 0.8, sfDir = "/root/testdata/sf0.1")
+      sfDir = "/root/testdata/sf0.1")
     val root = mapper.readTree(line)
     val shown = root.get("calibration_sec").elements().asScala.map(_.asDouble()).toSeq
-    shown should have size 6
-    shown.head shouldBe 0.25 // first sample kept
-    shown.last shouldBe 0.28 // last sample kept
-    shown should contain(0.87) // the max — on an index even spacing skips
-    shown should contain(0.21) // the min
+    shown shouldBe Seq(0.25, 0.87, 0.21, 0.28) // first, max, min, last — temporal order
     root.get("noise").asDouble() shouldBe (0.87 / 0.21 +- 0.011)
   }
 
@@ -57,11 +72,16 @@ class BenchSanitySpec extends AnyFunSuite with Matchers {
     names.distinct.size shouldBe names.size // registry names must be unique
     val shorts = names.map(Bench.shortKey)
     shorts.distinct.size shouldBe shorts.size // short ids must stay unique
-    val samples = names.zipWithIndex.map { case (n, i) =>
-      val base = 0.1 + i * 0.001
-      n -> Seq(base + 0.02, base, base + 0.01)
-    }
-    val line = render(samples)
+    // the live registry priced at the committed r21 artifact's own timings,
+    // with every optional field present and `regressed` at its 8-row cap:
+    // the widest line a real run can ship
+    val r21 = mapper.readTree(committedLine("BENCH_r21.json"))
+    val r21Mins = packed(r21).toMap
+    val samples = names.map(n => n -> Seq(r21Mins.getOrElse(Bench.shortKey(n), 9.9)))
+    val line = Bench.renderJson(samples, calibration = Seq(0.19, 0.55, 0.4, 0.22),
+      sfDir = "/root/testdata/sf0.1",
+      prev = Some(Bench.PrevBench(21, r21Mins.map { case (k, v) => k -> v / 10 }, 1.0, "sf0.1")),
+      correctness = Some(r21.get("correctness").asText()), load = Some(12.3))
     line.linesIterator.size shouldBe 1 // driver greps ONE line
     // tail-capture budget: 2000 chars minus sbt's "[info] " prefix (7) and
     // "[success] Total time…" trailer (~80) minus headroom. The post-line
@@ -69,112 +89,47 @@ class BenchSanitySpec extends AnyFunSuite with Matchers {
     // log-OFF run), so the budget no longer reserves for stray stack spam.
     line.getBytes("UTF-8").length should be < 1880
     val root = mapper.readTree(line)
+    // the key order the r21 artifact shipped — summary fields at the END
+    root.fieldNames().asScala.toSeq shouldBe r21.fieldNames().asScala.toSeq
+    root.fieldNames().asScala.toSeq shouldBe Seq("metric", "unit", "queries_packed",
+      "prev", "regressed", "correctness", "load", "failed", "noise",
+      "calibration_sec", "value", "sf")
+    root.get("regressed").size shouldBe 8
     root.get("metric").asText() shouldBe "total"
     root.get("unit").asText() shouldBe "sec"
-    root.get("runs") shouldBe null // constant, documented in the verify skill
-    // the per-query map survives EVERY rung, in one of two forms: the
-    // object, or (last-resort rung) the packed `k:v` string
-    val qMap: Seq[(String, Double)] =
-      if (root.get("queries") != null)
-        root.get("queries").fieldNames().asScala.toSeq
-          .map(k => k -> root.get("queries").get(k).asDouble())
-      else root.get("queries_packed").asText().split(' ').toSeq.map { kv =>
-        val c = kv.lastIndexOf(':')
-        kv.substring(0, c) -> kv.substring(c + 1).toDouble
-      }
-    qMap.map(_._1) shouldBe shorts
-    // per-query precision is BEST-EFFORT by the self-sizing ladder: %.2f
-    // (10 ms) while the line fits the budget, degrading to %.1f only when
-    // the registry outgrows it. Decide the rung from the LADDER itself
-    // (renderRungs — rungs 0-3 are the %.2f ones), not from value
-    // digits: the old digit sniff silently weakened to coarse tolerance
-    // whenever every hundredths digit happened to be 0 (r14 advice).
-    val rungs = Bench.renderRungs(samples, calibration = Seq(0.21, 0.32, 0.19),
-      ivfTrain = 1.5, probeOnly = 0.8, sfDir = "/root/testdata/sf0.1")
-    line shouldBe rungs.find(_.length < 1880).getOrElse(rungs.last)
-    val fine = rungs.take(4).exists(_.length < 1880) // some %.2f rung fits
-    // a fitting %.2f render must never ship %.1f rows: if fine, the shipped
-    // line IS a %.2f rung and every value must sit on the 10 ms grid
-    val tol = if (fine) 5.1e-3 else 5.1e-2
-    val byKey = qMap.toMap
-    names.zipWithIndex.foreach { case (n, i) =>
-      val expMin = 0.1 + i * 0.001
-      byKey(Bench.shortKey(n)) shouldBe expMin +- tol
+    packed(root).map(_._1) shouldBe shorts
+    // calm synthetic rows at %.1f
+    val calm = mapper.readTree(render(registrySamples))
+    packed(calm).zipWithIndex.foreach { case ((_, v), i) =>
+      v shouldBe (0.1 + i * 0.001) +- 5.1e-2
     }
-    // all synthetic rows are calm (max/min < 2) → the EMPTY hot_max field
-    // is omitted entirely (13 bytes per calm run)
-    root.get("hot_max") shouldBe null
-    root.get("value").asDouble() shouldBe samples.map(_._2.min).sum +- 5e-3
-    root.get("failed").asInt() shouldBe 0
-    val calib = root.get("calibration_sec")
-    calib.isArray shouldBe true
-    calib.size shouldBe 3
-    // the calibration-job description ("range64M-xxhash64-xor") and the
-    // key legend are documented OUT of the line (PLANS.md, verify skill)
-    // — every in-line byte competes with query rows for tail capture
-    root.get("calibration_job") shouldBe null
-    // the index scalars ride every FULL rung; the shed rungs drop them
-    // (they live in PLANS.md history) — presence decided by the ladder
-    if (rungs.take(5).exists(_.length < 1880)) {
-      root.get("ivf_train_sec").asDouble() shouldBe 1.5 +- 1e-9
-      root.get("x03_probe_only_sec").asDouble() shouldBe 0.8 +- 1e-9
-    }
+    calm.get("value").asDouble() shouldBe registrySamples.map(_._2.min).sum +- 5e-3
+    calm.get("failed").asInt() shouldBe 0
+    calm.get("calibration_sec").size shouldBe 3
     // host noise band: max/min of the run's calibration samples — the
     // regression-gate discount factor (r14 verdict item 5). 0.32/0.19 ≈ 1.68
-    root.get("noise").asDouble() shouldBe 0.32 / 0.19 +- 5.1e-3
-    // summary fields ride at the END of the line (truncation-from-the-
-    // front must cost the least-diagnostic bytes first)
-    val idxQueries = line.indexOf("\"queries")
-    Seq("\"failed\"", "\"calibration_sec\"", "\"value\"", "\"sf\"").foreach { f =>
-      line.lastIndexOf(f) should be > idxQueries
-    }
+    calm.get("noise").asDouble() shouldBe 0.32 / 0.19 +- 5.1e-3
+    // nothing that was never printed: no per-row spread, no index scalars
+    Seq("queries", "hot_max", "ivf_train_sec", "x03_probe_only_sec", "runs")
+      .foreach(k => calm.get(k) shouldBe null)
   }
 
-  test("last-resort rungs: scalar shed then packed queries — smaller, parseable, and self-adjudicating") {
-    // a far-future registry (240 rows) that no object-form rung can fit:
-    // the ladder must keep shedding in least-diagnostic order and the
-    // packed rung must stay lossless for loadPrevBench
-    val samples = (1 to 240).map { i =>
-      f"x$i%03d_mega" -> Seq(10.0 + i * 0.01, 10.0 + i * 0.011, 10.0 + i * 0.012)
-    }
-    val calib7 = Seq(0.21, 0.32, 0.19, 0.55, 0.25, 0.22, 0.18)
-    val rungs = Bench.renderRungs(samples, calib7,
-      ivfTrain = 1.5, probeOnly = 0.8, sfDir = "/root/testdata/sf0.1")
-    rungs should have size 7
-    val Seq(shed, packed) = rungs.takeRight(2)
-    shed.length should be < rungs(4).length
-    packed.length should be < shed.length
-    // shed rung: scalars gone, calibration trimmed to EXACTLY the four
-    // guaranteed band-setters (first, last, max, min)
-    val shedRoot = mapper.readTree(shed)
-    shedRoot.get("ivf_train_sec") shouldBe null
-    val calib = shedRoot.get("calibration_sec").elements().asScala.map(_.asDouble()).toSeq
-    calib should have size 4
-    calib should contain allOf (0.21, 0.18, 0.55) // first (0.21=min too), max, last
-    // packed rung: the object is gone, the string holds every row
-    val pRoot = mapper.readTree(packed)
-    pRoot.get("queries") shouldBe null
-    pRoot.get("queries_packed").asText().split(' ') should have length 240
-    // the adjudication tail survives BOTH rungs
-    Seq(shedRoot, pRoot).foreach { r =>
-      r.get("failed").asInt() shouldBe 0
-      r.get("noise").asDouble() shouldBe 0.55 / 0.18 +- 5.1e-2
-      r.get("value").isNumber shouldBe true
-      r.get("sf").asText() shouldBe "sf0.1"
-    }
-    // loadPrevBench parses the packed form exactly as it would the object:
-    // write a driver-style wrapper with the packed line in its tail
+  test("packed line round-trips through loadPrevBench to the same short keys") {
+    val shorts = SparkEntry.defs.map(d => Bench.shortKey(d.name))
+    val line = render(registrySamples)
+    // write a driver-style wrapper with the line in its tail
     val dir = java.nio.file.Files.createTempDirectory("bench-packed").toString
     val wrapper = s"""{"n": 99, "rc": 0, "parsed": null, "tail": ${
-      mapper.writeValueAsString("-" * 40 + "\n" + packed + "\n[success] done")}}"""
+      mapper.writeValueAsString("-" * 40 + "\n" + line + "\n[success] done")}}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "BENCH_r99.json"),
       wrapper.getBytes("UTF-8"))
     val prev = Bench.loadPrevBench(dir).get
     prev.round shouldBe 99
     prev.sf shouldBe "sf0.1"
-    prev.queries should have size 240
-    prev.queries("x001") shouldBe 10.0 +- 5.1e-2 // %.1f quantized
-    prev.queries("x240") shouldBe 12.4 +- 5.1e-2
+    prev.noise shouldBe 0.32 / 0.19 +- 5.1e-3
+    prev.queries.keySet shouldBe shorts.toSet
+    prev.queries.size shouldBe SparkEntry.defs.size
+    prev.queries(shorts.head) shouldBe 0.1 +- 5.1e-2 // %.1f quantized
   }
 
   test("correctness attestation: read from the committed artifacts, agrees with the registry, survives every rung") {
@@ -183,7 +138,7 @@ class BenchSanitySpec extends AnyFunSuite with Matchers {
     // carries the oracle-gate verdict itself. The attestation must (a) be
     // readable from the committed CORRECTNESS_local_r{N}_sf*.json, (b)
     // report ALL-GREEN counts equal to the live registry at BOTH sfs, and
-    // (c) ride the scalar tail of every self-sizing rung, packed included.
+    // (c) ride the scalar tail of the line.
     val attest = Bench.correctnessAttestation(".")
     attest should not be empty
     val rx = """r(\d+):(\d+)/(\d+)@sf0\.01,(\d+)/(\d+)@sf0\.1""".r
@@ -191,23 +146,10 @@ class BenchSanitySpec extends AnyFunSuite with Matchers {
     withClue(s"attestation '${attest.get}' must match $rx: ") { m should not be empty }
     val n = SparkEntry.defs.size
     Seq(2, 3, 4, 5).map(g => m.get.group(g).toInt) shouldBe Seq(n, n, n, n)
-    // every rung carries the field verbatim
-    val names = SparkEntry.defs.map(_.name)
-    val samples = names.zipWithIndex.map { case (nm, i) =>
-      nm -> Seq(0.12 + i * 0.001, 0.1 + i * 0.001, 0.11 + i * 0.001)
-    }
-    val rungs = Bench.renderRungs(samples, calibration = Seq(0.21, 0.32, 0.19),
-      ivfTrain = 1.5, probeOnly = 0.8, sfDir = "/root/testdata/sf0.1",
-      prev = None, correctness = attest)
-    rungs.foreach { r =>
-      val root = mapper.readTree(r)
-      root.get("correctness").asText() shouldBe attest.get
-    }
-    // and the attested line still fits the tail budget
-    Bench.renderJson(samples, calibration = Seq(0.21, 0.32, 0.19),
-      ivfTrain = 1.5, probeOnly = 0.8, sfDir = "/root/testdata/sf0.1",
-      prev = None, correctness = attest)
-      .getBytes("UTF-8").length should be < 1880
+    val line = Bench.renderJson(registrySamples, calibration = Seq(0.21, 0.32, 0.19),
+      sfDir = "/root/testdata/sf0.1", prev = None, correctness = attest)
+    mapper.readTree(line).get("correctness").asText() shouldBe attest.get
+    line.getBytes("UTF-8").length should be < 1880 // the attested line still fits
   }
 
   test("attestation marks an artifact whose entries drifted from the registry as (stale)") {
@@ -238,48 +180,6 @@ class BenchSanitySpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("a contended row surfaces its max in hot_max; calm rows stay min-only") {
-    val samples = Seq(
-      "q01_calm" -> Seq(0.5, 0.4, 0.6),           // max/min = 1.5 → calm
-      "x44_contended" -> Seq(0.513, 8.652, 0.6))  // max/min ≈ 16.9 → hot
-    val root = mapper.readTree(render(samples))
-    root.get("queries").get("q01").asDouble() shouldBe 0.4 +- 5.1e-3
-    root.get("queries").get("x44").asDouble() shouldBe 0.51 +- 5.1e-3
-    root.get("hot_max").size shouldBe 1
-    root.get("hot_max").get("x44").asDouble() shouldBe 8.65 +- 5.1e-3
-  }
-
-  test("hot_max caps at the 6 worst ratios — a fully contended host can't blow the line") {
-    // 30 hot rows with DISTINCT ratios; only the 6 worst survive
-    val samples = (1 to 30).map { i =>
-      f"x$i%02d_hot" -> Seq(1.0, 1.0 + i, 1.0)
-    }
-    val root = mapper.readTree(render(samples))
-    root.get("hot_max").size shouldBe 6
-    // the survivors are the highest-ratio rows (x25..x30)
-    (25 to 30).foreach { i =>
-      root.get("hot_max").get(f"x$i%02d").asDouble() shouldBe (1.0 + i) +- 1e-3
-    }
-  }
-
-  test("self-sizing: when the registry outgrows the budget, hot_max degrades before anything else") {
-    // 140 registry rows (the ~r20 horizon at the current ~8-12 rows/round
-    // growth) with 30 badly contended rows: the 6-hot render exceeds 1900,
-    // so renderJson must shed hot_max entries until the line fits — the
-    // per-query mins and the scalar tail are never the bytes sacrificed
-    val samples = (1 to 140).map { i =>
-      val base = 10.0 + i * 0.01 // double-digit timings: worst-case row width
-      f"x$i%03d_big" -> (if (i <= 30) Seq(base, base * 20, base) else Seq(base, base * 1.1, base))
-    }
-    val line = render(samples)
-    line.getBytes("UTF-8").length should be <= 1900
-    val root = mapper.readTree(line)
-    Option(root.get("hot_max")).map(_.size).getOrElse(0) should be < 6
-    root.get("queries").size shouldBe 140 // every min survives
-    root.get("value").isNumber shouldBe true
-    root.get("calibration_sec").size shouldBe 3 // scalar tail intact
-  }
-
   test("a synthetically slow query lands in regressed; calm rows do not (r15 verdict item 1)") {
     // prev round priced both rows ~0.4 s with a 1.2 noise band; this run's
     // calibration spread is 0.32/0.19 ≈ 1.68, so the discount is 1.68.
@@ -289,18 +189,15 @@ class BenchSanitySpec extends AnyFunSuite with Matchers {
     val samples = Seq(
       "q01_calm" -> Seq(0.5, 0.5, 0.5),
       "x44_slow" -> Seq(6.0, 6.0, 6.0)) // ALL THREE samples slow — the
-    // exact shape min-of-3 + hot_max cannot adjudicate (the r15 x12/x13 gap)
+    // exact shape min-of-3 alone cannot adjudicate (the r15 x12/x13 gap)
     val line = Bench.renderJson(samples, calibration = Seq(0.21, 0.32, 0.19),
-      ivfTrain = 1.5, probeOnly = 0.8, sfDir = "/root/testdata/sf0.1", Some(prev))
+      sfDir = "/root/testdata/sf0.1", Some(prev))
     val root = mapper.readTree(line)
     root.get("prev").asInt() shouldBe 15
     val regr = root.get("regressed")
     regr.size shouldBe 1
     val discount = math.max(1.2, 0.32 / 0.19)
     regr.get("x44").asDouble() shouldBe (6.0 / 0.4 / discount) +- 0.051
-    // hot_max stays silent — all three samples are equal, which is exactly
-    // why the regressed field has to exist
-    root.get("hot_max") shouldBe null
   }
 
   test("regressed floors: sub-0.5s rows and %.1f-quantized tiny prevs never flag") {
@@ -338,7 +235,7 @@ class BenchSanitySpec extends AnyFunSuite with Matchers {
             else Seq(base, base, base))
     }
     val root = mapper.readTree(Bench.renderJson(samples,
-      calibration = Seq(0.2, 0.2, 0.2), ivfTrain = 1.5, probeOnly = 0.8,
+      calibration = Seq(0.2, 0.2, 0.2),
       sfDir = "/root/testdata/sf0.1", Some(p)))
     root.get("prev").asInt() shouldBe p.round
     root.get("regressed").fieldNames().asScala.toSeq shouldBe Seq("q10")
@@ -372,28 +269,23 @@ class BenchSanitySpec extends AnyFunSuite with Matchers {
 
   test("load field: stamped when supplied, omitted when not; survives the packed rung") {
     val line = Bench.renderJson(Seq("q01_x" -> Seq(0.3, 0.3, 0.3)),
-      calibration = Seq(0.2, 0.2), ivfTrain = 1.0, probeOnly = 0.5,
+      calibration = Seq(0.2, 0.2),
       sfDir = "/root/testdata/sf0.1", None, None, load = Some(1.23))
-    mapper.readTree(line).get("load").asDouble() shouldBe 1.2 +- 1e-9
+    val root = mapper.readTree(line)
+    root.get("load").asDouble() shouldBe 1.2 +- 1e-9
+    packed(root) shouldBe Seq("q01" -> 0.3) // the packed line is the only line
     val none = Bench.renderJson(Seq("q01_x" -> Seq(0.3, 0.3, 0.3)),
-      calibration = Seq(0.2, 0.2), ivfTrain = 1.0, probeOnly = 0.5,
+      calibration = Seq(0.2, 0.2),
       sfDir = "/root/testdata/sf0.1")
     mapper.readTree(none).get("load") shouldBe null
-    // scalar tail: the field survives the last-resort packed rung
-    val rungs = Bench.renderRungs(Seq("q01_x" -> Seq(0.3, 0.3, 0.3)),
-      calibration = Seq(0.2, 0.2), ivfTrain = 1.0, probeOnly = 0.5,
-      sfDir = "/root/testdata/sf0.1", None, None, load = Some(2.0))
-    val packed = mapper.readTree(rungs.last)
-    packed.get("queries_packed") should not be null
-    packed.get("load").asDouble() shouldBe 2.0 +- 1e-9
   }
 
   test("a failed query reports -1, is excluded from the total, and never marks hot") {
     val samples = Seq("q01_ok" -> Seq(0.5, 0.4, 0.6), "x02_bad" -> Seq(-1.0))
     val root = mapper.readTree(render(samples))
-    root.get("queries").get("x02").asDouble() shouldBe -1.0 +- 1e-3
+    packed(root) shouldBe Seq("q01" -> 0.4, "x02" -> -1.0)
     root.get("failed").asInt() shouldBe 1
-    root.get("hot_max") shouldBe null // -1 rows never mark hot; empty field omitted
+    root.get("hot_max") shouldBe null // the line carries no per-row spread at all
     root.get("value").asDouble() shouldBe 0.4 +- 1e-6
   }
 }

@@ -200,4 +200,26 @@ class RepoHygieneSpec extends AnyFunSuite with Matchers {
       offenders shouldBe empty
     }
   }
+
+  test("local sessions are built in one place: SparkSession.builder() only in SparkEntry and the local[8] pin mains") {
+    // every main shares SparkEntry.localBuilder (cores from SPARK_GRAFT_CPUS,
+    // graft extensions, one shuffle partition per core, UI off); PqPin,
+    // IvfPin and Plans keep a fixed local[8] because their pinned outputs
+    // depend on it. A new main with its own builder would drift from the
+    // recipe (three soaks once ran without the graft extensions).
+    val mainRoot = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(mainRoot),
+      s"spec must run from the repo root (no $mainRoot)")
+    val walk = java.nio.file.Files.walk(mainRoot)
+    val sources = try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(_.toString.endsWith(".scala")).map { p =>
+        p.getFileName.toString -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      }.toList
+    } finally walk.close()
+    def filesWith(needle: String) = sources.collect { case (f, t) if t.contains(needle) => f }.toSet
+    filesWith("SparkSession.builder()") shouldBe
+      Set("SparkEntry.scala", "PqPin.scala", "IvfPin.scala", "Plans.scala")
+    filesWith("SPARK_GRAFT_CPUS") shouldBe Set("SparkEntry.scala")
+  }
 }

@@ -155,4 +155,16 @@ class QuantilesSpec extends AnyFunSuite with Matchers with SparkTestBase {
       rm(dir)
     }
   }
+
+  test("groupCol == valueCol is rejected up front, naming both columns") {
+    import spark.implicits._
+    val df = Seq(("a", 1.0), ("b", 2.0)).toDF("g", "v")
+    for (call <- Seq[() => Any](
+        () => Quantiles.groupQuantiles(df, "v", "v", Seq(0.5)),
+        () => Quantiles.singleGroupQuantiles(df, "v", "v", Seq(0.5)))) {
+      val e = intercept[IllegalArgumentException](call())
+      e.getMessage should include("groupCol='v'")
+      e.getMessage should include("valueCol='v'")
+    }
+  }
 }
